@@ -4,9 +4,9 @@ The reference has no resume story (ConversionStatus lives only for the
 run, /root/reference/docling/datamodel/base_models.py:48-54). At 10^12
 documents a job WILL be preempted, so:
 
-* every completed batch appends ``(url, partition_id, attempt, status,
-  batch_ts)`` rows to a lineage table (parquet/Iceberg append — atomic
-  at the file/snapshot level);
+* every attempt appends ``(url, partition_id, attempt, status,
+  batch_ts)`` rows to a lineage table in one write (parquet/Iceberg
+  append — atomic at the file/snapshot level);
 * on restart, the input is filtered with a broadcast-friendly
   ``left_anti`` join against the successful lineage urls;
 * re-processing after a partial write is idempotent because results are
@@ -15,10 +15,8 @@ documents a job WILL be preempted, so:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-LINEAGE_COLS = ("url", "partition_id", "attempt", "status", "batch_ts")
-
 
 def lineage_rows(results: DataFrame, attempt: int = 0) -> DataFrame:
     return results.select(
@@ -30,8 +28,30 @@ def lineage_rows(results: DataFrame, attempt: int = 0) -> DataFrame:
     )
 
 
-def write_lineage(results: DataFrame, path: str, attempt: int = 0) -> None:
-    lineage_rows(results, attempt).write.mode("append").parquet(path)
+def recorded_urls(spark: SparkSession, lineage_path: str, status: str) -> DataFrame | None:
+    """Distinct urls recorded with ``status``; None when no lineage exists
+    yet. Other read errors propagate rather than mean "nothing done"."""
+    try:
+        lineage = spark.read.parquet(lineage_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+    return lineage.filter(F.col("status") == status).select("url").distinct()
+
+
+def write_lineage(results: DataFrame, path: str, attempt: int = 0,
+                  skipped: DataFrame | None = None) -> None:
+    """One append per attempt: a row per result plus a row per ``skipped``
+    url not yet recorded as skipped (repeated attempts do not grow it)."""
+    rows = lineage_rows(results, attempt)
+    if skipped is not None:
+        skips = lineage_rows(skipped, attempt)
+        already = recorded_urls(skipped.sparkSession, path, "skipped")
+        if already is not None:
+            skips = skips.join(already, "url", "left_anti")
+        rows = rows.unionByName(skips)
+    rows.write.mode("append").parquet(path)
 
 
 def resume_filter(pages: DataFrame, spark: SparkSession, lineage_path: str) -> DataFrame:
@@ -41,16 +61,7 @@ def resume_filter(pages: DataFrame, spark: SparkSession, lineage_path: str) -> D
     attempt (a length comparison — cheap) because the gate parameters
     may change between attempts (e.g. a raised --limit-bytes must
     un-skip previously oversized docs). Duplicate skip rows in lineage
-    are suppressed at append time (extract_job anti-joins new skips
-    against the recorded ones).
+    are suppressed at append time (``write_lineage``).
     """
-    try:
-        done = (
-            spark.read.parquet(lineage_path)
-            .filter(F.col("status") == "success")
-            .select("url")
-            .distinct()
-        )
-    except Exception:  # no lineage yet -> nothing to skip
-        return pages
-    return pages.join(done, "url", "left_anti")
+    done = recorded_urls(spark, lineage_path, "success")
+    return pages if done is None else pages.join(done, "url", "left_anti")

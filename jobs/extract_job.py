@@ -22,6 +22,12 @@ Replaces the reference's CLI driver (/root/reference/docling/cli/main.py:286+
 * per-partition lineage append -> idempotent resume via left_anti join;
 * per-doc metrics rows -> metrics table (reference: utils/profiling.py).
 
+Sink order per attempt: results (the only action that runs the kernel),
+a status count and metrics (from the cache), then ONE lineage append,
+last: an append refreshes every cached plan reading its path, and under
+--resume the results' plan reads the lineage, so a later action would
+re-extract against this attempt's own lineage rows and see no urls.
+
 At 10^12-document scale the same job runs unchanged: --input becomes an
 Iceberg table, --partitions scales with cluster cores, and a preempted
 run restarts with --resume --attempt N+1.
@@ -85,13 +91,14 @@ def run(spark, args) -> dict:
     # or re-extract. Previously-SKIPPED urls flow through on purpose:
     # the gate is re-evaluated each attempt so changed parameters
     # (e.g. a raised --limit-bytes) can un-skip them; duplicate skip
-    # lineage rows are suppressed at append time below.
+    # lineage rows are suppressed at append time (write_lineage).
     if args.resume:
         pages = resume_filter(pages, spark, args.lineage)
 
     # limits gate (reference: DocumentLimits, datamodel/document.py:116-181)
     gated = limits_gate(pages, max_bytes=args.limit_bytes)
-    skipped = gated.filter(F.col("gate_status") == "skipped")
+    skipped = gated.filter(F.col("gate_status") == "skipped").select(
+        "url", F.col("gate_status").alias("status"))
     pages_ok = gated.filter(F.col("gate_status") == "accepted").drop("gate_status")
 
     t0 = time.perf_counter()
@@ -107,53 +114,31 @@ def run(spark, args) -> dict:
             big_doc_bytes=args.big_doc_bytes,
         )
 
-    # one materialization, three outputs: results, lineage, metrics.
-    # persist() avoids re-running the extraction kernel per sink. The
-    # WRITE is the first action: under MEMORY_AND_DISK pressure at
-    # 10^12 scale a leading count() would evict blocks whose first
-    # materialization was then discarded; writing first makes the
-    # expensive pass also the durable one, and the counts after it read
-    # from cache (or, worst case, recompute — never the reverse).
+    # sinks in the docstring's order. Writing first makes the expensive
+    # pass also the durable one (a leading count() under MEMORY_AND_DISK
+    # pressure would evict blocks it then discards); the cached skip rows
+    # let the count and the lineage append share one gate pass.
     results.persist()
+    skipped.persist()
     results.write.mode("append").parquet(args.output)
-    n_out = results.count()
     t_extract = time.perf_counter() - t0
+    by_status = dict(results.select("status").unionByName(skipped.select("status"))
+                     .groupBy("status").count().collect())
+    n_skipped = by_status.pop("skipped", 0)
+    n_out = sum(by_status.values())
 
-    write_lineage(results, args.lineage, attempt=args.attempt)
     if args.metrics:
         # convert rows carry the same url/status/t_sec/n_nodes/bytes_in
         # metric columns as extract rows, so one metrics schema serves
         # both modes
         metrics_table(results).write.mode("append").parquet(args.metrics)
-
-    # skipped rows are lineage-recorded once: new skips anti-join the
-    # already-recorded ones so repeated attempts do not grow the table
-    n_skipped = skipped.count()
-    if n_skipped:
-        skipped_lineage = skipped.select(
-            "url",
-            F.spark_partition_id().alias("partition_id"),
-            F.lit(args.attempt).alias("attempt"),
-            F.lit("skipped").alias("status"),
-            F.current_timestamp().alias("batch_ts"),
-        )
-        try:
-            already = (
-                spark.read.parquet(args.lineage)
-                .filter(F.col("status") == "skipped")
-                .select("url")
-                .distinct()
-            )
-            skipped_lineage = skipped_lineage.join(already, "url", "left_anti")
-        except Exception:  # noqa: BLE001 — no lineage yet
-            pass
-        skipped_lineage.write.mode("append").parquet(args.lineage)
-
-    n_fail = results.filter(F.col("status") == "failure").count()
+    write_lineage(results, args.lineage, attempt=args.attempt,
+                  skipped=skipped if n_skipped else None)
     results.unpersist()
+    skipped.unpersist()
     return {
         "n_extracted": n_out,
-        "n_failed": n_fail,
+        "n_failed": by_status.get("failure", 0),
         "n_skipped": n_skipped,
         "t_extract_sec": round(t_extract, 3),
         "docs_per_sec": round(n_out / t_extract, 1) if t_extract > 0 else None,

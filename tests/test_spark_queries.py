@@ -83,6 +83,43 @@ def test_resume_filter(spark, tmp_path):
     assert len(urls) == total
 
 
+
+def _lineage_fixtures(spark, tmp_path):
+    """(pages, results, skipped, missing lineage path, corrupt lineage path)."""
+    pages = spark.createDataFrame([("u1",), ("u2",)], "url string")
+    results = spark.createDataFrame([("u1", "success")], "url string, status string")
+    skipped = spark.createDataFrame([("u2", "skipped")], "url string, status string")
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
+    return pages, results, skipped, str(tmp_path / "missing"), str(corrupt)
+
+
+def test_resume_filter_tolerates_only_a_missing_lineage(spark, tmp_path):
+    """No lineage yet means nothing is done; an unreadable lineage is an
+    error, not a reason to reprocess everything."""
+    from docling_spark.operators.lineage import resume_filter
+
+    pages, _, _, missing, corrupt = _lineage_fixtures(spark, tmp_path)
+    assert resume_filter(pages, spark, missing) is pages
+    with pytest.raises(Exception, match="(?i)parquet"):
+        resume_filter(pages, spark, corrupt)
+
+
+def test_write_lineage_skip_dedup_tolerates_only_a_missing_lineage(spark, tmp_path):
+    """The already-skipped read behind write_lineage's skip rows: a first
+    append creates the table, an unreadable lineage is an error."""
+    from docling_spark.operators.lineage import write_lineage
+
+    _, results, skipped, missing, corrupt = _lineage_fixtures(spark, tmp_path)
+    write_lineage(results, missing, attempt=0, skipped=skipped)
+    write_lineage(results.limit(0), missing, attempt=1, skipped=skipped)
+    rows = spark.read.parquet(missing).select("url", "attempt", "status").collect()
+    assert sorted(map(tuple, rows)) == [("u1", 0, "success"), ("u2", 0, "skipped")]
+    with pytest.raises(Exception, match="(?i)parquet"):
+        write_lineage(results, corrupt, attempt=0, skipped=skipped)
+
+
 def test_lsh_topk_recall_vs_brute_force(spark):
     """Single-probe hyperplane-LSH top-k recall against the exact
     answer: with 8-bit buckets on the synthetic embeddings the probe

@@ -160,3 +160,87 @@ def test_spark_submit_split_big_docs(spark, pages_input, tmp_path):
     # the 20% ~80 KB band both clear the 64 KiB threshold
     n_big = sum(1 for r in b if r[4] >= (64 << 10))
     assert n_big >= 2
+
+
+PARTIAL_LIMIT = 64 << 10  # gates out the ~80 KB band and the ~1 MB row
+# Spark jobs the resumed attempt below submits (AQE on, as in the test
+# session): the extraction stage runs once, in the results write. Running
+# it once per sink, as an append-invalidated cache does, costs 31.
+MAX_RESUME_JOBS = 17
+
+
+@pytest.fixture(scope="module")
+def partial_resume(spark, pages_input, tmp_path_factory):
+    """extract_job.run in-process: attempt 0 over a seeded half of the
+    pages, then attempt 1 with --resume over all of them, each under its
+    own job group. Per attempt: (returned stats, Spark jobs submitted,
+    output rows it added, failure rows it added)."""
+    from pyspark.sql import functions as F
+
+    from jobs import extract_job
+
+    base = tmp_path_factory.mktemp("partial_resume")
+    half = base / "half"
+    spark.read.parquet(str(pages_input)).filter(
+        F.xxhash64("url") % 2 == 0
+    ).write.parquet(str(half))
+    dirs = {s: str(base / s) for s in ("out", "lineage", "metrics")}
+    sc = spark.sparkContext
+
+    def out_counts():
+        if not os.path.exists(dirs["out"]):
+            return 0, 0
+        out = spark.read.parquet(dirs["out"])
+        return out.count(), out.filter(F.col("status") == "failure").count()
+
+    attempts = []
+    for attempt, inp in enumerate((half, pages_input)):
+        argv = ["--input", str(inp), "--output", dirs["out"],
+                "--lineage", dirs["lineage"], "--metrics", dirs["metrics"],
+                "--partitions", "8", "--attempt", str(attempt),
+                "--limit-bytes", str(PARTIAL_LIMIT)] + ["--resume"] * attempt
+        group = f"partial-resume-{attempt}"
+        before = out_counts()
+        sc.setJobGroup(group, group)
+        try:
+            stats = extract_job.run(spark, extract_job.build_parser().parse_args(argv))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        after = out_counts()
+        attempts.append((stats, n_jobs, after[0] - before[0], after[1] - before[1]))
+    return attempts, dirs
+
+
+def test_partial_resume_records_every_url_once(spark, pages_input, partial_resume):
+    """A resume over a half-done input: every url extracted by either
+    attempt has one metrics row and one success/failure lineage row, and
+    every gated-out url one skipped row."""
+    from pyspark.sql import functions as F
+
+    attempts, dirs = partial_resume
+    out_urls = sorted(r.url for r in spark.read.parquet(dirs["out"]).select("url").collect())
+    assert len(out_urls) == len(set(out_urls))
+    assert all(n_out > 0 for _, _, n_out, _ in attempts)
+
+    met_urls = sorted(r.url for r in spark.read.parquet(dirs["metrics"]).select("url").collect())
+    assert met_urls == out_urls
+
+    lin = spark.read.parquet(dirs["lineage"])
+    done = sorted(r.url for r in lin.filter(F.col("status") != "skipped").select("url").collect())
+    assert done == out_urls
+    skip_urls = sorted(r.url for r in lin.filter(F.col("status") == "skipped").select("url").collect())
+    big = sorted(r.url for r in spark.read.parquet(str(pages_input))
+                 .filter(F.length("html") > PARTIAL_LIMIT).select("url").collect())
+    assert big and skip_urls == big
+
+    for stats, _, n_out, n_fail in attempts:
+        assert (stats["n_extracted"], stats["n_failed"]) == (n_out, n_fail)
+    assert attempts[1][0]["n_skipped"] == len(big)
+
+
+def test_resumed_attempt_extracts_once(partial_resume):
+    """The resumed attempt runs the extraction stage once: its Spark job
+    count stays at the single-extraction figure."""
+    attempts, _ = partial_resume
+    assert attempts[1][1] <= MAX_RESUME_JOBS, attempts[1][1]
